@@ -454,7 +454,8 @@ def main() -> None:
         "queries": times,
         "sf": SF_DIR,
         "extraction": {
-            "n_turns": pair_b["n_turns"],
+            "n_turns_linear": pair_a["n_turns"],
+            "n_turns_saturation": pair_b["n_turns"],
             "north_rule_figure": "scaling_efficiency_linear",
             "cores_linear": [small_a, big_a],
             "turns_per_sec_linear": [

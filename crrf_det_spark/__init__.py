@@ -7,3 +7,9 @@ reference repository studied read-only at /root/reference.
 """
 
 __version__ = "0.1.0"
+
+from ._zipcache import install as _install_zipcache
+
+# Spark workers import this package to unpickle its kernels; from then on
+# a task start no longer re-reads pyspark.zip and the spark-core jar.
+_install_zipcache()

@@ -5,7 +5,8 @@ Scale notes (the whole point of these shapes):
 * exact:     one hash agg; map-side partial, no raw-text shuffle (only the
              64-char digest moves).
 * minhash:   signatures via one numpy pass per Arrow batch (k permutations
-             vectorized as (a*h+b) mod p over the shingle-hash vector);
+             vectorized as ((a*h+b) mod 2^64) mod p over the shingle-hash
+             vector: the uint64 product wraps before the prime reduction);
              LSH banding turns all-pairs O(n^2) into a per-bucket join.
 * simhash:   64-bit signature per doc from token-hash bit votes; near-dup =
              small hamming distance within LSH bands of the signature.
@@ -91,8 +92,11 @@ def minhash_signatures(
     """(doc_id, signature: array<bigint>) via mapInPandas.
 
     One numpy pass per batch: shingle-hash vector h, then per permutation i
-    min((a_i*h + b_i) mod p).  Empty/short docs get an all-p signature
-    (never matches anything).
+    min(((a_i*h + b_i) mod 2^64) mod p).  The uint64 product wraps mod
+    2^64 before the reduction by p, so this is not the textbook universal
+    hash (e.g. a=p-5, h=p-7, b=3 gives 53, not 38); it is still a fixed
+    per-permutation map, which is all the min-hash estimate needs.
+    Empty/short docs get an all-p signature (never matches anything).
     """
     rng = np.random.RandomState(seed)
     a = rng.randint(1, _MERSENNE, size=num_hashes, dtype=np.int64).astype(np.uint64)
@@ -278,8 +282,9 @@ def minhash_word_signatures(
 
     Token hash = md5 low 64 bits little-endian (DuckDB
     ``md5_number_lower`` parity, same as simhash_signatures) reduced mod
-    the Mersenne prime, then k permutations (a*h+b) mod p vectorized in
-    one numpy pass per doc.
+    the Mersenne prime, then k permutations ((a*h+b) mod 2^64) mod p
+    (uint64 wrap before the prime reduction, as in
+    ``minhash_signatures``) vectorized in one numpy pass per doc.
     """
     import hashlib
 

@@ -204,8 +204,8 @@ def extract_payload_turns(
     """Binary-payload variant of ``extract_transcripts`` for tool-emitted
     attachments: PDF payloads go through the pure-stdlib text extractor
     (pdfmini) then the SAME grid kernel; utf-8 payloads dispatch through
-    the HTML/text auto path.  Undecodable payloads yield zero segments
-    (n_chars_in still recorded).
+    the HTML/text auto path.  Undecodable payloads, malformed PDFs
+    included, yield zero segments (n_chars_in still recorded).
 
     PDF payloads carry TRUE line geometry (pdfmini tracks the text
     matrix; pdf_text_lines_geometry converts baselines to the reference's
@@ -227,7 +227,13 @@ def extract_payload_turns(
                     continue
                 b = bytes(payload)
                 if looks_like_pdf(b):
-                    lines, geom = pdf_text_lines_geometry(b)
+                    try:
+                        lines, geom = pdf_text_lines_geometry(b)
+                    except (ValueError, IndexError):
+                        # malformed PDF (bad /W array, xref field, octal
+                        # escape or MediaBox number): an empty-text row,
+                        # not a failed task that aborts the whole job
+                        lines, geom = [], None
                     texts.append("\n".join(lines))
                     geoms.append(geom)
                 else:

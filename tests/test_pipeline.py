@@ -128,6 +128,43 @@ def test_payload_turns_pdf_and_html(spark):
     assert out[("c2", 2)].n_segments == 0
 
 
+def test_payload_turns_isolate_a_malformed_pdf(spark):
+    """One PDF whose MediaBox number does not parse (pdfmini raises
+    ValueError on it) among good ones: the job completes, that row is
+    empty and every other row matches its golden."""
+    from crrf_det_spark.pdfmini import make_pdf, pdf_text_lines_geometry
+    from crrf_det_spark.pipeline import extract_payload_turns
+
+    turns, goldens = synth.generate(n_convs=4, seed=7)
+    turns = [t for t in turns if not t["text"].startswith("<!DOCTYPE")][:8]
+    keys = [(t["conv_id"], t["turn_idx"]) for t in turns]
+    parts = {}
+    for g in goldens:
+        parts.setdefault((g["conv_id"], g["turn_idx"]), []).append(g)
+    want = {
+        k: "\n".join(g["content"] for g in sorted(parts[k], key=lambda g: g["cindex"]))
+        for k in keys
+    }
+    payloads = [make_pdf(t["text"].split("\n"), compress=False) for t in turns]
+    bad = payloads[3].replace(b"/MediaBox [0 0", b"/MediaBox [0.0.1 0", 1)
+    with pytest.raises(ValueError):
+        pdf_text_lines_geometry(bad)
+    payloads[3] = bad
+    df = spark.createDataFrame(
+        [(*k, bytearray(p)) for k, p in zip(keys, payloads)],
+        "conv_id string, turn_idx int, payload binary",
+    )
+    out = {
+        (r.conv_id, r.turn_idx): r
+        for r in extract_payload_turns(df, num_partitions=2).collect()
+    }
+    assert sorted(out) == sorted(keys)
+    assert out[keys[3]].n_segments == 0
+    assert out[keys[3]].extracted_text == ""
+    for k in keys[:3] + keys[4:]:
+        assert out[k].extracted_text == want[k], k
+
+
 def test_payload_turns_cid_cmap_xref_stream_pdf(spark):
     """Round-4 VERDICT #6 'done' criterion: a fixture PDF with a CMap'd
     Type0 font, object-stream-packed dicts, and a PNG-predictor xref
